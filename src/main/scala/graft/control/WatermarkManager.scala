@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Incremental-run bookkeeping — the engine's version of the reference's
@@ -26,16 +27,17 @@ class WatermarkManager(spark: SparkSession, path: String) {
   /** Epoch fallback used on first run (`Pembelian/run.js:121-122`). */
   val epoch: Timestamp = Timestamp.valueOf("1970-01-01 00:00:00")
 
+  /** The whole control table, read with its fixed `LogSchema`: no footer
+    * is read and no schema-inference job runs. A missing table reads as
+    * the empty log. */
   def log: DataFrame =
-    try spark.read.parquet(path)
+    try spark.read.schema(WatermarkManager.LogSchema).parquet(path)
     catch { case _: Exception => emptyLog }
 
   private def emptyLog: DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "description STRING, start TIMESTAMP, finish TIMESTAMP, " +
-          "executionTime STRING, status STRING"))
+      WatermarkManager.LogSchema)
 
   /** Low watermark for `pipeline`: `start` of the latest successful run
     * (by `finish`), falling back to the epoch. Failed runs never advance
@@ -74,6 +76,11 @@ class WatermarkManager(spark: SparkSession, path: String) {
 }
 
 object WatermarkManager {
+  /** Schema of the control table: one row per run. */
+  val LogSchema: StructType = StructType.fromDDL(
+    "description STRING, start TIMESTAMP, finish TIMESTAMP, " +
+      "executionTime STRING, status STRING")
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def appendLock(path: String): Object =

@@ -398,9 +398,10 @@ object relational {
     * pass, and deployments that disagree raise the conf. */
   private def sampledBoundaryBucket(keyed: DataFrame, order: Seq[Column],
                                     n: Int): Column = {
-    val maxB = keyed.sparkSession.conf
-      .getOption("spark.graft.counter.maxBoundaries")
-      .map(_.toInt).getOrElse(1024)
+    val key = "spark.graft.counter.maxBoundaries"
+    val maxB = keyed.sparkSession.conf.getOption(key).map(v =>
+      v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer, got '$v'"))).getOrElse(1024)
     val nb = math.min(n, math.max(1, maxB))
     val aliased = order.zipWithIndex.map { case (c, i) => c.as(s"__k$i") }
     val kCols = order.indices.map(i => col(s"__k$i"))

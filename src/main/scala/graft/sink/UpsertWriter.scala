@@ -84,8 +84,11 @@ object UpsertWriter {
     // the restore, this run would see "first write" and MERGE only the
     // batch, silently dropping the table
     if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
+    // the current state's schema comes from one footer read on the
+    // driver, not from a schema-inference job (ParquetSchema.read)
     val merged =
-      if (fs.exists(target)) mergedPlan(spark.read.parquet(t.path), t.batch, t.keys)
+      if (fs.exists(target))
+        mergedPlan(graft.sources.ParquetSchema.read(spark, t.path), t.batch, t.keys)
       else t.batch
     val laidOut = {
       val parted =

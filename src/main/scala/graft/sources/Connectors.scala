@@ -17,16 +17,18 @@ sealed trait Connector {
 }
 
 /** Directory-of-parquet connector (the lake layout; one file/dir per
-  * table). `mergeSchema = true` reconciles files written under evolved
-  * schemas (added columns surface as nulls on old files) — at a cost:
-  * every file footer is read at planning, so leave it off for tables
-  * with a settled schema. */
+  * table). A read of a Spark-written table costs one footer, read on the
+  * driver, and no Spark job ([[ParquetSchema.read]]); other files cost
+  * Spark's one-task inference job. `mergeSchema = true` reconciles files
+  * written under evolved schemas (added columns surface as nulls on old
+  * files) — at a cost: a Spark job reads every file footer at planning,
+  * so leave it off for tables with a settled schema. */
 final case class ParquetConnector(dir: String,
                                   mergeSchema: Boolean = false) extends Connector {
   def read(spark: SparkSession, table: String): DataFrame = {
-    val r = spark.read
-    (if (mergeSchema) r.option("mergeSchema", "true") else r)
-      .parquet(s"$dir/$table.parquet")
+    val path = s"$dir/$table.parquet"
+    if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
+    else ParquetSchema.read(spark, path)
   }
   def write(df: DataFrame, table: String, mode: SaveMode): Unit =
     df.write.mode(mode).parquet(s"$dir/$table.parquet")

@@ -158,6 +158,20 @@ class RelationalOpsSpec extends SparkSpec {
     assert(key(wide) === key(default))
   }
 
+  test("a malformed spark.graft.counter.maxBoundaries fails naming the " +
+      "conf key and the bad value") {
+    import spark.implicits._
+    val df = (1 to 100).map(i => (i, s"k$i")).toDF("sort_key", "payload")
+    spark.conf.set("spark.graft.counter.maxBoundaries", "lots")
+    try {
+      val e = intercept[IllegalArgumentException](
+        relational.contiguousRowNumberSampledRange(df, Seq(col("sort_key")),
+          "row_id", numPartitions = Some(8)))
+      assert(e.getMessage.contains("spark.graft.counter.maxBoundaries"))
+      assert(e.getMessage.contains("'lots'"))
+    } finally spark.conf.unset("spark.graft.counter.maxBoundaries")
+  }
+
   test("contiguousRowNumberViaJoin: narrow-shuffle twin is bit-identical " +
       "to the default form (and to the window) on a unique total order") {
     import spark.implicits._
